@@ -4,7 +4,20 @@ This is the north-rule-mandated path ("batched H3/S2-style cell encoding via
 pandas/Arrow UDFs, no per-row Python"): each UDF receives pandas Series
 backed by Arrow batches and calls the vectorized kernel once per batch.
 The expression path (encode_sql.spark_encode) must produce identical cellids;
-tests/test_spark_encode.py asserts the two agree."""
+tests/test_spark_encode.py asserts the two agree.
+
+The cellid factories return their UDF marked non-deterministic, so each row
+is encoded once.  A deterministic UDF lets Catalyst push any predicate on
+its output (a cellid-prefix filter, a join's IsNotNull, a batch filter above
+a ``groupBy("cellid")``) below the projection, where it re-evaluates the UDF
+as a second ArrowEvalPython: two Arrow round trips per row.  Marked, the
+predicate stays above one evaluation and still runs before the partial
+aggregate.  The cost: every stage downstream of the encode is indeterminate.
+On a cluster, a shuffle fetch failure under such a stage fails the job
+instead of retrying the stage, so a store write dies and ``plans.lineage``'s
+resume replays the batch.  The values themselves are a pure function of the
+input.  ``cellkey_from_lonlat_udf`` stays deterministic: no caller filters
+on the key."""
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -16,23 +29,31 @@ from ..dggs.config import RHEALPixConfig, DEFAULT_CONFIG
 
 
 def cellid_from_lonlat_udf(res: int, cfg: RHEALPixConfig = DEFAULT_CONFIG):
-    """pandas UDF: (lon deg, lat deg) -> cellid string at ``res``."""
+    """pandas UDF: (lon deg, lat deg) -> cellid string at ``res``.
+
+    Marked non-deterministic, so a filter on the cellid never re-runs the
+    encode; the price is that downstream stages are indeterminate and a
+    shuffle fetch failure fails the job (module docstring)."""
     @F.pandas_udf(StringType())
     def _encode(lon: pd.Series, lat: pd.Series) -> pd.Series:
         out = cells.lonlat_to_cellid(lon.to_numpy(), lat.to_numpy(), res, cfg)
         return pd.Series(out)
 
-    return _encode
+    return _encode.asNondeterministic()
 
 
 def cellid_from_planar_udf(res: int, cfg: RHEALPixConfig = DEFAULT_CONFIG):
-    """pandas UDF: planar (x, y) meters -> cellid string at ``res``."""
+    """pandas UDF: planar (x, y) meters -> cellid string at ``res``.
+
+    Marked non-deterministic, so a filter on the cellid never re-runs the
+    encode; the price is that downstream stages are indeterminate and a
+    shuffle fetch failure fails the job (module docstring)."""
     @F.pandas_udf(StringType())
     def _encode(x: pd.Series, y: pd.Series) -> pd.Series:
         out = cells.planar_to_cellid(x.to_numpy(), y.to_numpy(), res, cfg)
         return pd.Series(out)
 
-    return _encode
+    return _encode.asNondeterministic()
 
 
 _XY_SCHEMA = StructType([StructField("x", DoubleType()), StructField("y", DoubleType())])

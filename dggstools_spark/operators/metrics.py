@@ -164,10 +164,7 @@ def line_error(nodes: DataFrame, cells: DataFrame, res: int,
     from ..dggs import geodesy
     from ..functions.encode import cellid_from_lonlat_udf, cell_centroid_udf
 
-    # the cellid feeds semi- AND anti-joins: mark non-deterministic so
-    # Catalyst does not split the UDF into IsNotNull-filter + projection
-    # per branch (CLAUDE.md rule 4 — up to 4x Arrow evaluations otherwise)
-    enc = cellid_from_lonlat_udf(res, cfg).asNondeterministic()
+    enc = cellid_from_lonlat_udf(res, cfg)
     cent = cell_centroid_udf(cfg, geodetic=True)
     assigned = nodes.withColumn(cellid_col, enc(lon, lat))
     matched = assigned.join(cells.select(cellid_col).distinct(), cellid_col, "left_semi")

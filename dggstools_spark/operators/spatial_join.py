@@ -27,21 +27,11 @@ from ..functions import encode_sql
 def assign_cells(points: DataFrame, res: int, lon: str = "lon", lat: str = "lat",
                  cfg: RHEALPixConfig = DEFAULT_CONFIG, out: str = "cellid",
                  prefix_partitions: int | None = None,
-                 prefix_len: int = 3,
-                 single_eval: bool = False) -> DataFrame:
+                 prefix_len: int = 3) -> DataFrame:
     """J1: Arrow-batched point->cell assignment; optionally repartitions by
     the cell prefix so downstream joins/aggs on cell keys are co-located
-    (the Iceberg-truncate-transform layout at cluster scale).
-
-    ``single_eval`` marks the UDF non-deterministic, which stops Catalyst
-    from splitting it into a pushed ``IsNotNull`` filter + projection (two
-    Python evaluations per row when the column feeds an inner join).  Use it
-    when the cellid feeds joins; leave off when it feeds groupBy expressions
-    directly."""
-    enc = cellid_from_lonlat_udf(res, cfg)
-    if single_eval:
-        enc = enc.asNondeterministic()
-    df = points.withColumn(out, enc(lon, lat))
+    (the Iceberg-truncate-transform layout at cluster scale)."""
+    df = points.withColumn(out, cellid_from_lonlat_udf(res, cfg)(lon, lat))
     if prefix_partitions:
         df = df.repartition(prefix_partitions, F.substring(out, 1, prefix_len))
     return df
@@ -284,12 +274,10 @@ def rasterize_polygons(polygons: DataFrame, res: int,
             .select(poly_id, "px", "py").distinct()
         )
         inside = inside.unionByName(touched).distinct()
-    # centroid -> cellid via the planar pandas UDF (handles cap faces);
-    # non-deterministic marking keeps the isNotNull filter from duplicating
-    # the Python evaluation (see assign_cells single_eval)
+    # centroid -> cellid via the planar pandas UDF (handles cap faces)
     from ..functions.encode import cellid_from_planar_udf
 
-    enc = cellid_from_planar_udf(res, cfg).asNondeterministic()
+    enc = cellid_from_planar_udf(res, cfg)
     return inside.select(poly_id, enc("px", "py").alias("cellid")).filter(
         F.col("cellid").isNotNull())
 
@@ -301,7 +289,7 @@ def pip_join(points: DataFrame, polygons: DataFrame, res: int,
     """Full J2: docs -> cellid at ``res``; polygons -> covering cells; inner
     equi-join on cellid (the DGGS raison d'etre: PIP becomes a hash join)."""
     cells = rasterize_polygons(polygons, res, poly_id, ring, cfg)
-    docs = assign_cells(points, res, lon, lat, cfg, single_eval=True)
+    docs = assign_cells(points, res, lon, lat, cfg)
     return docs.filter(F.col("cellid").isNotNull()).join(F.broadcast(cells), "cellid")
 
 
@@ -646,7 +634,7 @@ def segment_cells(segments: DataFrame, res: int, seg_id: str = "seg_id",
     segment of length L that is (L/w + 2)² candidates, so callers should
     bound L (a trajectory step filter) rather than feed transcontinental
     jumps to a fine lattice; cells come out via the planar pandas-UDF
-    encoder (cap-face-safe), marked nondeterministic per constraint 4."""
+    encoder (cap-face-safe)."""
     from ..functions.encode import cellid_from_planar_udf
 
     w = HALF_SIDE / cfg.n_side**res
@@ -665,7 +653,7 @@ def segment_cells(segments: DataFrame, res: int, seg_id: str = "seg_id",
             .withColumn("px", F.lit(gx0) + (F.col("ci") + 0.5) * w)
             .withColumn("py", F.lit(gy0) - (F.col("ri") + 0.5) * w)
             .filter(F.expr(sat_edge_rect_sql(w / 2.0))))
-    enc = cellid_from_planar_udf(res, cfg).asNondeterministic()
+    enc = cellid_from_planar_udf(res, cfg)
     return (cand.select("seg_id", enc("px", "py").alias("cellid"))
             .filter(F.col("cellid").isNotNull()))
 
@@ -742,7 +730,7 @@ def buffer_cells(points: DataFrame, d_m: float, res: int,
             .filter(F.expr(
                 f"(cx - _px) * (cx - _px) + (cy - _py) * (cy - _py)"
                 f" <= CAST({d_m * d_m!r} AS DOUBLE)")))
-    enc = cellid_from_planar_udf(res, cfg).asNondeterministic()
+    enc = cellid_from_planar_udf(res, cfg)
     return (cand.select(enc("cx", "cy").alias("cellid"))
             .filter(F.col("cellid").isNotNull())
             .groupBy("cellid").agg(F.count("*").alias("n_pts")))

@@ -11,34 +11,22 @@ Storage layout (plain parquet here; Iceberg tables on a real cluster):
 
 ``checkpointed_write`` is idempotent per batch key: completed batches are
 skipped on replay, half-written batches are overwritten (dynamic partition
+overwrite, set per write so the session's other writes keep static
 overwrite), so a failed run re-executed from the top converges to the same
-table state deterministically."""
+table state deterministically.
+
+``run_batches`` returns ``{batch_key: wrote}``: every key already committed
+before the call maps to False, every key this call committed maps to True.
+The written keys come from the lineage read-back, not from a separate pass
+over the input, so the upstream (typically a pandas-UDF encode) is evaluated
+once per call.  Read-backs use the schema just written, so ``batch_key``
+stays a string even when every key is digits ("00" is not read back as 0)."""
 
 from __future__ import annotations
 
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-
-
-def with_lineage(df: DataFrame, batch_key: str) -> DataFrame:
-    """Tag rows with their physical partition id (for the lineage agg)."""
-    return df.withColumn("_pid", F.spark_partition_id()) \
-             .withColumn("batch_key", F.lit(batch_key))
-
-
-def lineage_rows(df: DataFrame, batch_key: str, key_cols: list[str]) -> DataFrame:
-    """(batch_key, partition_id, n_rows, checksum) per physical partition —
-    an order-insensitive xor/sum checksum over the key columns, cheap enough
-    to run inline with the write."""
-    tagged = with_lineage(df, batch_key)
-    # xor-fold: order-insensitive and overflow-free (ANSI mode forbids a
-    # plain sum of 64-bit hashes)
-    return tagged.groupBy("batch_key", "_pid").agg(
-        F.count("*").alias("n_rows"),
-        F.expr(f"bit_xor(xxhash64({', '.join(key_cols)}))").alias("checksum"),
-    ).withColumnRenamed("_pid", "partition_id") \
-     .withColumn("written_at", F.lit(int(time.time())))
 
 
 def completed_batches(spark: SparkSession, root: str) -> set[str]:
@@ -61,27 +49,39 @@ def checkpointed_write(df: DataFrame, root: str, batch_key: str,
     spark = df.sparkSession
     if batch_key in completed_batches(spark, root):
         return False
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     tagged = df.withColumn("batch_key", F.lit(batch_key))
-    tagged.write.mode("overwrite").partitionBy("batch_key").parquet(f"{root}/data")
     # lineage + marker from a read-back of the COMMITTED partition: the
     # (possibly expensive) upstream is evaluated exactly once, and
     # n_rows/checksum/partition_id describe what is actually on disk rather
     # than a separate re-evaluation of the pipeline
-    written = spark.read.parquet(f"{root}/data") \
-        .filter(F.col("batch_key") == batch_key)
+    written = _write_data(tagged, root).filter(F.col("batch_key") == batch_key)
     lin = _lineage_agg(written, key_cols).localCheckpoint(eager=True)
     lin.write.mode("append").parquet(f"{root}/_lineage")
     n = lin.agg(F.coalesce(F.sum("n_rows"), F.lit(0))).first()[0]
-    spark.createDataFrame([(batch_key, int(n), "done")],
-                          "batch_key string, n_rows long, status string") \
-        .write.mode("append").parquet(f"{root}/_batches")
+    # a JVM row in one file: a Python-list createDataFrame would start
+    # Python workers for one marker
+    marker = spark.range(1, numPartitions=1).select(
+        F.lit(batch_key).alias("batch_key"), F.lit(n).cast("long").alias("n_rows"),
+        F.lit("done").alias("status"))
+    marker.write.mode("append").parquet(f"{root}/_batches")
     return True
+
+
+def _write_data(tagged: DataFrame, root: str) -> DataFrame:
+    """Write ``tagged`` into ``<root>/data`` by dynamic partition overwrite
+    (replaces only the batch keys it contains) and return a read-back of
+    the whole table with the schema just written."""
+    path = f"{root}/data"
+    tagged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
+        .partitionBy("batch_key").parquet(path)
+    return tagged.sparkSession.read.schema(tagged.schema).parquet(path)
 
 
 def _lineage_agg(tagged: DataFrame, key_cols: list[str]) -> DataFrame:
     """(batch_key, partition_id, n_rows, checksum, written_at) from a
-    batch_key-tagged DataFrame (one row per physical partition)."""
+    batch_key-tagged DataFrame (one row per physical partition).  The
+    xor-fold checksum is order-insensitive and overflow-free (ANSI mode
+    forbids a plain sum of 64-bit hashes)."""
     return tagged.withColumn("_pid", F.spark_partition_id()).groupBy(
         "batch_key", "_pid").agg(
         F.count("*").alias("n_rows"),
@@ -91,40 +91,31 @@ def _lineage_agg(tagged: DataFrame, key_cols: list[str]) -> DataFrame:
 
 
 def run_batches(df: DataFrame, root: str, batch_col: str,
-                key_cols: list[str], serial: bool = False) -> dict[str, bool]:
+                key_cols: list[str]) -> dict[str, bool]:
     """Partition a DataFrame into batches by ``batch_col`` (e.g. the cell
     prefix) and checkpoint-write them; resumable from any point.
 
-    Default (non-failure) path: ONE partitioned write job covers every
-    pending batch (data partitioned by batch key, lineage + commit markers
-    from single aggregations) — no per-batch driver loop, so 10^4 tile
-    batches cost one shuffle, not 10^4 jobs.  A crash mid-write leaves all
-    pending batches uncommitted; the replay dynamic-partition-overwrites
-    exactly those, so convergence is deterministic.  ``serial=True`` keeps
-    the one-job-per-batch path (finer-grained resume when individual
-    batches are huge or flaky)."""
+    ONE partitioned write job covers every pending batch (data partitioned
+    by batch key, lineage + commit markers from single aggregations) — no
+    per-batch driver loop, so 10^4 tile batches cost one shuffle, not 10^4
+    jobs.  Rows whose key is already committed, or null, are not written.
+    A crash mid-write leaves all pending batches uncommitted; the replay
+    dynamic-partition-overwrites exactly those, so convergence is
+    deterministic.  The read-back covers every uncommitted partition on
+    disk, so a partition a crashed run wrote under a key this input no
+    longer produces is committed too.  Returns done keys as False and the
+    keys written now as True (module docstring)."""
     spark = df.sparkSession
-    keys = sorted(str(r[0]) for r in df.select(batch_col).distinct().collect())
     done = completed_batches(spark, root)
-    if serial:
-        results = {}
-        for k in keys:
-            part = df.filter(F.col(batch_col) == k)
-            results[k] = checkpointed_write(part, root, k, key_cols)
-        return results
-    pending = [k for k in keys if k not in done]
-    if pending:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        tagged = df.withColumn("batch_key", F.col(batch_col).cast("string")) \
-                   .filter(F.col("batch_key").isin(pending))
-        tagged.write.mode("overwrite").partitionBy("batch_key").parquet(f"{root}/data")
-        # one upstream evaluation total: lineage + markers come from a cheap
-        # columnar read-back of the committed files (see checkpointed_write)
-        written = spark.read.parquet(f"{root}/data") \
-            .filter(F.col("batch_key").isin(pending))
-        lin = _lineage_agg(written, key_cols).localCheckpoint(eager=True)
-        lin.write.mode("append").parquet(f"{root}/_lineage")
-        markers = lin.groupBy("batch_key").agg(F.sum("n_rows").alias("n_rows")) \
-            .withColumn("status", F.lit("done"))
-        markers.write.mode("append").parquet(f"{root}/_batches")
-    return {k: (k in pending) for k in keys}
+    tagged = df.withColumn("batch_key", F.col(batch_col).cast("string"))
+    pending = F.col("batch_key").isNotNull()
+    if done:
+        pending &= ~F.col("batch_key").isin(sorted(done))
+    written = _write_data(tagged.filter(pending), root).filter(pending)
+    lin = _lineage_agg(written, key_cols).localCheckpoint(eager=True)
+    lin.write.mode("append").parquet(f"{root}/_lineage")
+    markers = lin.groupBy("batch_key").agg(F.sum("n_rows").alias("n_rows")) \
+        .withColumn("status", F.lit("done"))
+    markers.write.mode("append").parquet(f"{root}/_batches")
+    wrote = {r.batch_key for r in lin.select("batch_key").distinct().collect()}
+    return dict.fromkeys(done, False) | dict.fromkeys(wrote, True)

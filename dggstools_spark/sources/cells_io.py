@@ -12,6 +12,7 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from ..dggs.config import RHEALPixConfig, DEFAULT_CONFIG
 
@@ -41,12 +42,14 @@ def build_attrs(res_idx: int, nbands: int, nodata: float | None,
 def write_cells(df: DataFrame, path: str, attrs: dict,
                 cellid_col: str = "cellid", prefix_len: int = 2,
                 mode: str = "overwrite") -> None:
-    """Write a cell table partitioned by cellid prefix + _meta sidecar."""
+    """Write a cell table partitioned by cellid prefix + _meta sidecar.  The
+    sidecar records the data schema, so ``read_cells`` skips inference."""
     out = df.withColumn("cell_prefix", F.substring(cellid_col, 1, prefix_len))
     out.write.mode(mode).partitionBy("cell_prefix").parquet(f"{path}/data")
     os.makedirs(path, exist_ok=True)
     with open(f"{path}/_meta.json", "w") as f:
-        json.dump({"attrs": attrs, "prefix_len": prefix_len}, f, indent=2)
+        json.dump({"attrs": attrs, "prefix_len": prefix_len,
+                   "schema": out.schema.jsonValue()}, f, indent=2)
 
 
 def read_cells(spark: SparkSession, path: str,
@@ -55,10 +58,14 @@ def read_cells(spark: SparkSession, path: str,
     """Read a cell table (+attrs).  ``prefix`` prunes partitions; a prefix
     FINER than the stored partition prefix_len additionally row-filters on
     the cellid (a bare startswith on the partition column would silently
-    return nothing: 'N1'.startswith('N12') is false for every partition)."""
-    df = spark.read.parquet(f"{path}/data")
+    return nothing: 'N1'.startswith('N12') is false for every partition).
+    Tables written without a recorded schema infer it."""
     with open(f"{path}/_meta.json") as f:
         meta = json.load(f)
+    reader = spark.read
+    if "schema" in meta:
+        reader = reader.schema(StructType.fromJson(meta["schema"]))
+    df = reader.parquet(f"{path}/data")
     if prefix:
         plen = int(meta.get("prefix_len", 2))
         if len(prefix) <= plen:

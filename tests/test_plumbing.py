@@ -11,10 +11,13 @@ from dggstools_spark.sources import cells_io
 from dggstools_spark.functions import media
 
 
-def test_checkpointed_write_resume(spark, tmp_path):
+@pytest.mark.parametrize("face", ["Q", "0"], ids=["letter_keys", "digit_keys"])
+def test_checkpointed_write_resume(spark, tmp_path, face):
+    # digit-only batch keys ("00", "01", ...) must stay strings through the
+    # read-back, or the commit markers store 0, 1, ... and resume rewrites all
     root = str(tmp_path / "ckpt")
     df = spark.createDataFrame(
-        [(f"Q{i % 3}{i % 9}", float(i)) for i in range(90)],
+        [(f"{face}{i % 3}{i % 9}", float(i)) for i in range(90)],
         "cellid string, band1 double",
     ).withColumn("prefix", F.substring("cellid", 1, 2))
     res = lineage.run_batches(df, root, "prefix", ["cellid"])
@@ -28,12 +31,72 @@ def test_checkpointed_write_resume(spark, tmp_path):
     lin = spark.read.parquet(f"{root}/_lineage")
     assert lin.agg(F.sum("n_rows")).first()[0] == 90
     # replay after losing a commit marker overwrites deterministically
-    batches = spark.read.parquet(f"{root}/_batches").filter(F.col("batch_key") != "Q0")
+    batches = spark.read.parquet(f"{root}/_batches").filter(F.col("batch_key") != f"{face}0")
     batches.write.mode("overwrite").parquet(f"{root}/_batches_new")
     os.system(f"rm -rf {root}/_batches && mv {root}/_batches_new {root}/_batches")
     res3 = lineage.run_batches(df, root, "prefix", ["cellid"])
-    assert res3 == {"Q0": True, "Q1": False, "Q2": False}
+    assert res3 == {f"{face}0": True, f"{face}1": False, f"{face}2": False}
     assert spark.read.parquet(f"{root}/data").count() == 90
+
+
+def _markers(spark, root):
+    rows = spark.read.parquet(f"{root}/_batches").groupBy("batch_key").agg(
+        F.count("*").alias("commits"), F.sum("n_rows").alias("n_rows")).collect()
+    return {r.batch_key: (r.commits, r.n_rows) for r in rows}
+
+
+def test_run_batches_resume_reports_done_and_written(spark, tmp_path):
+    """A resume after one checkpointed batch returns that batch as False and
+    the ones it wrote as True, and every batch is committed exactly once."""
+    root = str(tmp_path / "resume")
+    df = spark.createDataFrame(
+        [(f"{face}{i % 9}", i) for face in "NOP" for i in range(12)],
+        "cellid string, n long").withColumn("batch", F.substring("cellid", 1, 1))
+    assert lineage.checkpointed_write(df.filter(F.col("batch") == "N"), root, "N", ["cellid"])
+    assert lineage.run_batches(df, root, "batch", ["cellid"]) == \
+        {"N": False, "O": True, "P": True}
+    assert _markers(spark, root) == {k: (1, 12) for k in "NOP"}
+    # a second resume writes and commits nothing
+    assert lineage.run_batches(df, root, "batch", ["cellid"]) == \
+        {"N": False, "O": False, "P": False}
+    assert _markers(spark, root) == {k: (1, 12) for k in "NOP"}
+    assert spark.read.parquet(f"{root}/data").count() == 36
+
+
+def test_write_cells_overwrite_after_lineage_write(spark, tmp_path):
+    """Lineage writes set dynamic partition overwrite per write, not for the
+    session: a later overwrite of a cell table must drop stale prefixes."""
+    lineage.run_batches(
+        spark.createDataFrame([("N1", "N")], "cellid string, batch string"),
+        str(tmp_path / "lineage"), "batch", ["cellid"])
+    path = str(tmp_path / "cells")
+    attrs = cells_io.build_attrs(1, 1, None)
+    schema = "cellid string, band1 double"
+    cells_io.write_cells(spark.createDataFrame([("N1", 1.0), ("O2", 2.0)], schema),
+                         path, attrs, mode="overwrite")
+    cells_io.write_cells(spark.createDataFrame([("P3", 3.0)], schema),
+                         path, attrs, mode="overwrite")
+    back, _ = cells_io.read_cells(spark, path)
+    assert [r.cellid for r in back.collect()] == ["P3"]
+
+
+def test_read_cells_without_recorded_schema(spark, tmp_path):
+    """Tables written before _meta.json carried the schema still read, by
+    inference; ones with it read back with exactly the written schema."""
+    import json
+
+    path = str(tmp_path / "cells")
+    df = spark.createDataFrame([("Q12", 1.0), ("N34", 2.0)], "cellid string, band1 double")
+    cells_io.write_cells(df, path, cells_io.build_attrs(2, 1, None))
+    back, _ = cells_io.read_cells(spark, path)
+    assert back.schema == df.schema
+    with open(f"{path}/_meta.json") as f:
+        meta = json.load(f)
+    del meta["schema"]
+    with open(f"{path}/_meta.json", "w") as f:
+        json.dump(meta, f)
+    legacy, attrs = cells_io.read_cells(spark, path, prefix="Q")
+    assert [r.cellid for r in legacy.collect()] == ["Q12"] and attrs["res_idx"] == 2
 
 
 def test_rmse_bias_zero_on_identity(spark):
@@ -307,7 +370,8 @@ def test_deploy_zip_freshness_gate(tmp_path):
     repairs any divergence from the source tree (the round-1/2 stale-deploy
     failure mode)."""
     import sys
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "scripts"))
     import make_pyfiles_zip as mz
 
     p = str(tmp_path / "a.zip")

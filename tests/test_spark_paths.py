@@ -8,9 +8,12 @@
 3. centroid UDF roundtrip through the planar UDFs.
 """
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from dggstools_spark.dggs import cells, projection
 from dggstools_spark.functions import encode_sql
 from dggstools_spark.functions.encode import (
     cellid_from_lonlat_udf,
@@ -84,3 +87,27 @@ def test_interleaved_docs_shape(docs):
     assert offsets == sorted(offsets)
     kinds = {s.kind for s in row.spans}
     assert kinds <= {"text", "image", "audio"}
+
+
+@pytest.mark.parametrize("factory,cols", [(cellid_from_lonlat_udf, ("lon", "lat")),
+                                          (cellid_from_planar_udf, ("x", "y"))],
+                         ids=["lonlat", "planar"])
+def test_cellid_prefix_filter_encodes_once(spark, factory, cols):
+    """A cellid-prefix filter over groupBy("cellid") stays above ONE Arrow
+    evaluation of the encode (a deterministic UDF gets the filter pushed
+    below its projection as a second ArrowEvalPython)."""
+    lon = np.linspace(-170.0, 170.0, 200)
+    lat = np.linspace(-80.0, 80.0, 200)
+    x, y = projection.forward(lon, lat)
+    pts = pd.DataFrame({"lon": lon, "lat": lat, "x": x, "y": y})
+    counted = (spark.createDataFrame(pts).select(*cols)
+               .withColumn("cellid", factory(3)(*cols))
+               .groupBy("cellid").count()
+               .filter(F.col("cellid").startswith("Q")))
+    got = sorted((r.cellid, r["count"]) for r in counted.collect())
+    want = pd.Series(cells.lonlat_to_cellid(lon, lat, 3)).value_counts()
+    assert got == sorted((c, n) for c, n in want.items() if c.startswith("Q"))
+    # the executed adaptive plan prints its final plan, then the initial one
+    plan = counted._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("ArrowEvalPython") == 1, plan
