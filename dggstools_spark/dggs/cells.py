@@ -19,8 +19,6 @@ from . import projection
 PI = np.pi
 HALF_SIDE = (PI / 2.0) * AUTHALIC_RADIUS  # side length of a resolution-0 cell (m)
 
-_FACE_ORD = {c: i for i, c in enumerate("NOPQRS")}
-
 
 def _face_ul(cfg: RHEALPixConfig) -> np.ndarray:
     """(6,2) array of upper-left corners (meters) of the base cells N,O,P,Q,R,S."""

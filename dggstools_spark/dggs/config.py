@@ -39,8 +39,6 @@ AUTHALIC_RADIUS = WGS84_A * math.sqrt(Q_P / 2.0)
 #: (Gibb/Raichev/Speth 2013; reference rhpxutils.py:19).
 MEAN_AREAL_DISTORTION = 1.178
 
-BASE_CELLS = "NOPQRS"
-
 
 @dataclass(frozen=True)
 class RHEALPixConfig:

@@ -21,7 +21,6 @@ import numpy as np
 from .config import AUTHALIC_RADIUS, WGS84_E, WGS84_E2, Q_P
 
 PI = np.pi
-EQ_LAT = np.arcsin(2.0 / 3.0)  # |authalic lat| boundary between zones
 
 
 # --------------------------------------------------------------------------

@@ -1,10 +1,9 @@
 """Cellid string algebra as pure Spark Column expressions (no Python at all).
 
-Distributed counterparts of the reference's cellid helpers
-(/root/reference/dggstools/rhpx/rhpxutils.py:49-107): parent, ascendants,
-children, descendants, resolution.  Everything is substring/concat/sequence
-arithmetic, so it stays inside whole-stage codegen and is usable in joins,
-group-bys and partition pruning."""
+Distributed counterparts of the reference's cellid helpers parent and
+children (dggstools rhpx/rhpxutils.py:55-83).  Everything is
+substring/concat/sequence arithmetic, so it stays inside whole-stage codegen
+and is usable in joins, group-bys and partition pruning."""
 
 from __future__ import annotations
 
@@ -12,31 +11,9 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def resolution_idx(cellid: Column) -> Column:
-    """resolution index = len(cellid) - 1 (rhpxutils.py:52-53)."""
-    return F.length(cellid) - F.lit(1)
-
-
 def parent(cellid: Column) -> Column:
     """parent cellid; '' for base cells (rhpxutils.py:55-59)."""
     return F.expr(f"substring({_name(cellid)}, 1, length({_name(cellid)}) - 1)")
-
-
-def ascendant_at(cellid: Column, res: int) -> Column:
-    """ascendant at resolution ``res``; NULL if not strictly coarser
-    (rhpxutils.py:61-69)."""
-    c = _name(cellid)
-    return F.expr(f"CASE WHEN length({c}) - 1 > {res} THEN substring({c}, 1, {res + 1}) ELSE NULL END")
-
-
-def ascendants_up_to(cellid: Column, res: int) -> Column:
-    """array of ascendants from ``res`` up to (excluding) own resolution
-    (rhpxutils.py:71-79)."""
-    c = _name(cellid)
-    return F.expr(
-        f"CASE WHEN length({c}) - 1 <= {res} THEN array()"
-        f" ELSE transform(sequence({res} + 1, length({c}) - 1), i -> substring({c}, 1, i)) END"
-    )
 
 
 def children(cellid: Column, n_side: int) -> Column:
@@ -44,36 +21,6 @@ def children(cellid: Column, n_side: int) -> Column:
     c = _name(cellid)
     k = n_side * n_side - 1
     return F.expr(f"transform(sequence(0, {k}), d -> concat({c}, CAST(d AS STRING)))")
-
-
-def descendants_at(cellid: Column, n_side: int, res: int) -> Column:
-    """array of all descendants at exactly ``res`` (rhpxutils.py:85-97).
-    Expands n_side^(2*(res-own)) entries — use only for small deltas; the
-    distributed form is an explode-join."""
-    c = _name(cellid)
-    k = n_side * n_side
-
-    def expand(expr: str, depth: int) -> str:
-        if depth == 0:
-            return expr
-        inner = expand(expr, depth - 1)
-        return (f"flatten(transform({inner}, p -> "
-                f"transform(sequence(0, {k - 1}), d -> concat(p, CAST(d AS STRING)))))")
-
-    # depth depends on each cellid's own resolution; support the common
-    # fixed-resolution case via SQL CASE over possible lengths 1..res
-    branches = []
-    for own in range(0, res):
-        depth = res - own
-        branches.append(
-            f"WHEN length({c}) = {own + 1} THEN {expand(f'array({c})', depth)}"
-        )
-    return F.expr(f"CASE {' '.join(branches)} ELSE array() END")
-
-
-def prefix_at(cellid: Column, res: int) -> Column:
-    """substring(cellid, 1, res+1) — the ancestor used as partition/join key."""
-    return F.substring(cellid, 1, res + 1)
 
 
 def _name(col: Column) -> str:

@@ -28,14 +28,6 @@ from pyspark.sql.types import (ArrayType, BinaryType, DoubleType, FloatType,
                                IntegerType, LongType, StringType, StructField,
                                StructType)
 
-MEDIA_META = StructType([
-    StructField("kind", StringType()),       # image | audio | video
-    StructField("mime", StringType()),
-    StructField("width", IntegerType()),
-    StructField("height", IntegerType()),
-    StructField("n_frames", IntegerType()),
-    StructField("sample_rate", IntegerType()),
-])
 
 def feature_schema(dtype: str = "float32") -> StructType:
     elem = FloatType() if dtype == "float32" else DoubleType()
@@ -47,9 +39,6 @@ def feature_schema(dtype: str = "float32") -> StructType:
         StructField("feature", ArrayType(elem)),
         StructField("feat_dim", IntegerType()),
     ])
-
-
-FEATURE_SCHEMA = feature_schema()
 
 
 def deterministic_fake_decode(blob: bytes, out_pixels: int = 64) -> np.ndarray:

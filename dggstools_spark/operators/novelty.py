@@ -34,7 +34,6 @@ from pyspark.sql import DataFrame, functions as F
 from .dedup import shingles
 
 NOV_PPM = 1_000_000
-KEEP_QUANT = 1 << 20
 
 
 def novelty_score(df: DataFrame, text_col: str, id_col: str,

@@ -222,11 +222,6 @@ def ann_topk(cands: DataFrame, queries: DataFrame, k: int,
 # iterations for better list balance (deterministic too, pytest-pinned).
 # --------------------------------------------------------------------------
 
-def _sim_expr(a: str, b: str, dim: int | None = None) -> str:
-    dot = dot_spark(a, b, dim)
-    return f"round(({dot}) / ({nrm_spark(a, dim)} * {nrm_spark(b, dim)}), 9)"
-
-
 def ivf_centroids(cands: DataFrame, vec_col: str = "embedding",
                   id_col: str = "vec_id", mod: int = 23,
                   residue: int = 3) -> DataFrame:

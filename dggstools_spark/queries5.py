@@ -31,13 +31,12 @@ Two SQL constructions make the AUID pipeline value-checkable in DuckDB:
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .dggs.config import DEFAULT_CONFIG
 from .operators import auid as auid_ops
 from .queries3 import _docs_cells, _oracle_docs_cells
+from .registry import load, register
 
 
 # --------------------------------------------------------------------------
@@ -217,15 +216,8 @@ def _oracle_auid_optimize() -> str:
     """
 
 
-QUERIES5: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "auid_groups": q_auid_groups,
-    "auid_optimize": q_auid_optimize,
-}
-
-ORACLES5: dict[str, str] = {
-    "auid_groups": _oracle_auid_groups(),
-    "auid_optimize": _oracle_auid_optimize(),
-}
+register("auid_groups", q_auid_groups, _oracle_auid_groups())
+register("auid_optimize", q_auid_optimize, _oracle_auid_optimize())
 
 
 # --------------------------------------------------------------------------
@@ -281,8 +273,7 @@ def _oracle_resample_area() -> str:
     """
 
 
-QUERIES5["resample_area"] = q_resample_area
-ORACLES5["resample_area"] = _oracle_resample_area()
+register("resample_area", q_resample_area, _oracle_resample_area())
 
 
 # --------------------------------------------------------------------------
@@ -320,8 +311,7 @@ def _oracle_cells_json() -> str:
     """.format(enc=enc)
 
 
-QUERIES5["cells_json"] = q_cells_json
-ORACLES5["cells_json"] = _oracle_cells_json()
+register("cells_json", q_cells_json, _oracle_cells_json())
 
 
 # --------------------------------------------------------------------------
@@ -335,7 +325,6 @@ WN_MAX_DF = 20
 
 def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import winnow_pairs
-    from .queries3 import load
 
     # 1-in-5 doc sample: the full table's shared-phrase clusters produce
     # ~110k pairs and a 3-minute single-node oracle — the sample keeps the
@@ -368,8 +357,7 @@ def _oracle_winnow_pairs() -> str:
     """
 
 
-QUERIES5["winnow_pairs"] = q_winnow_pairs
-ORACLES5["winnow_pairs"] = _oracle_winnow_pairs()
+register("winnow_pairs", q_winnow_pairs, _oracle_winnow_pairs())
 
 
 # --------------------------------------------------------------------------
@@ -387,7 +375,6 @@ IVF_NPROBE = 3
 
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import ivf_topk
-    from .queries3 import load
 
     emb = load(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") % 50 == 0).select(
@@ -432,8 +419,7 @@ def _oracle_ivf_topk() -> str:
     """
 
 
-QUERIES5["ivf_topk"] = q_ivf_topk
-ORACLES5["ivf_topk"] = _oracle_ivf_topk()
+register("ivf_topk", q_ivf_topk, _oracle_ivf_topk())
 
 
 # --------------------------------------------------------------------------
@@ -450,8 +436,6 @@ def q_res_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.types import (IntegerType, LongType, StructField,
                                    StructType)
-
-    from .queries3 import load
 
     cfg = DEFAULT_CONFIG
     bases = load(spark, sf_dir, "part").select(
@@ -504,8 +488,7 @@ def _oracle_res_policy() -> str:
     """
 
 
-QUERIES5["res_policy"] = q_res_policy
-ORACLES5["res_policy"] = _oracle_res_policy()
+register("res_policy", q_res_policy, _oracle_res_policy())
 
 
 # --------------------------------------------------------------------------
@@ -524,7 +507,6 @@ IVF_DIM = 64
 
 def q_ivf_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import ivf_topk
-    from .queries3 import load
 
     emb = load(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") % 50 == 0).select(
@@ -594,8 +576,7 @@ def _oracle_ivf_refined() -> str:
     """
 
 
-QUERIES5["ivf_refined"] = q_ivf_refined
-ORACLES5["ivf_refined"] = _oracle_ivf_refined()
+register("ivf_refined", q_ivf_refined, _oracle_ivf_refined())
 
 
 # --------------------------------------------------------------------------
@@ -621,7 +602,6 @@ _BIT_SQL = "(CAST(floor({h} / power(2, CAST(j AS DOUBLE))) AS BIGINT) % 2)"
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import simhash_ids
-    from .queries3 import load
 
     docs = load(spark, sf_dir, "documents") \
         .filter(F.col("text").isNotNull() & (F.col("text") != ""))
@@ -662,8 +642,7 @@ def _oracle_simhash() -> str:
     """
 
 
-QUERIES5["simhash"] = q_simhash
-ORACLES5["simhash"] = _oracle_simhash()
+register("simhash", q_simhash, _oracle_simhash())
 
 
 # --------------------------------------------------------------------------
@@ -678,7 +657,6 @@ NG_THRESHOLD = 0.5
 
 def q_ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import ngram_jaccard_pairs
-    from .queries3 import load
 
     docs = load(spark, sf_dir, "documents")
     return ngram_jaccard_pairs(docs, "text", "doc_id",
@@ -718,8 +696,7 @@ def _oracle_ngram_pairs(table: str = "documents") -> str:
     """
 
 
-QUERIES5["ngram_pairs"] = q_ngram_pairs
-ORACLES5["ngram_pairs"] = _oracle_ngram_pairs()
+register("ngram_pairs", q_ngram_pairs, _oracle_ngram_pairs())
 
 
 # --------------------------------------------------------------------------
@@ -733,7 +710,6 @@ ORACLES5["ngram_pairs"] = _oracle_ngram_pairs()
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import dedup_clusters, ngram_jaccard_pairs
-    from .queries3 import load
 
     docs = load(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(docs, "text", "doc_id",
@@ -756,8 +732,7 @@ def _oracle_dedup_clusters() -> str:
     """
 
 
-QUERIES5["dedup_clusters"] = q_dedup_clusters
-ORACLES5["dedup_clusters"] = _oracle_dedup_clusters()
+register("dedup_clusters", q_dedup_clusters, _oracle_dedup_clusters())
 
 
 # --------------------------------------------------------------------------
@@ -768,7 +743,6 @@ ORACLES5["dedup_clusters"] = _oracle_dedup_clusters()
 # --------------------------------------------------------------------------
 
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .queries3 import load
     from .queries4 import _finish_stream, _stream_tmpdirs
     from .streaming import ingest
 
@@ -811,8 +785,7 @@ def _oracle_stream_dedup() -> str:
     """
 
 
-QUERIES5["stream_dedup"] = q_stream_dedup
-ORACLES5["stream_dedup"] = _oracle_stream_dedup()
+register("stream_dedup", q_stream_dedup, _oracle_stream_dedup())
 
 
 # --------------------------------------------------------------------------
@@ -826,7 +799,6 @@ ST_K = 4
 
 def q_salted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.skew import salted_topk_per_key
-    from .queries3 import load
 
     orders = load(spark, sf_dir, "orders").select(
         (F.col("o_custkey") % 7).alias("grp"),  # 7 hot groups
@@ -852,5 +824,4 @@ def _oracle_salted_topk() -> str:
     """
 
 
-QUERIES5["salted_topk"] = q_salted_topk
-ORACLES5["salted_topk"] = _oracle_salted_topk()
+register("salted_topk", q_salted_topk, _oracle_salted_topk())

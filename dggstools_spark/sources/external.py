@@ -121,12 +121,3 @@ def read_cells_jdbc(spark: SparkSession, url: str, table: str, driver: str,
         .option("dbtable", f"{table}_attrs").option("driver", driver).load()
     attrs = json.loads(meta.first()["attrs_json"])
     return df, attrs
-
-
-def write_cells_postgis(cells: DataFrame, attrs: dict, host: str, port: int,
-                        database: str, table: str, username: str,
-                        password: str, mode: str = "errorifexists") -> None:
-    """Reference-shaped convenience wrapper (storage.py:18-30 signature)."""
-    url = f"jdbc:postgresql://{host}:{port}/{database}"
-    write_cells_jdbc(cells, attrs, url, table, POSTGRES_DRIVER, mode,
-                     user=username, password=password)

@@ -68,10 +68,6 @@ def duckdb_lonlat_select(source_sql: str, id_col: str, keep: list[str]) -> str:
     return f"SELECT {cols} FROM ({inner})"
 
 
-SPANS_SCHEMA = ("doc_id string, spans array<struct<kind:string,text:string,"
-                "media_ref:string,offset:int>>, lon double, lat double")
-
-
 def interleaved_docs(spark, n_docs: int, partitions: int | None = None):
     """The interleaved text+media document table of BASELINE.json input_hint,
     built distributed (spark.range -> expressions; no driver-side loops)."""

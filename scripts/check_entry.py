@@ -1,8 +1,10 @@
-"""Replicates the driver's correctness gate locally:
+"""Checks __spark_entry__.py against its DuckDB oracles:
 
-runs entry(spark), then every queries()[name] at sf0.01 and compares against
-oracle_sql()[name] via DuckDB — row count, column-name set, and an
-order-insensitive value hash (columns sorted by name, rows canonicalized).
+runs entry(spark), then every queries()[name] (default sf0.01) and compares
+against oracle_sql()[name] via DuckDB with ``compare``: row count,
+column-name set, and an order-insensitive value hash (columns sorted by
+name, rows canonicalized).  tests/test_oracle_gate.py runs the same
+comparison at sf0.001 in tier-1.
 
 Usage: python scripts/check_entry.py [sf_dir] [query ...]
 """
@@ -14,10 +16,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-ONLY = set(sys.argv[2:])
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def canonical_hash(pdf) -> str:
@@ -39,7 +38,19 @@ def canonical_hash(pdf) -> str:
     return hashlib.md5("\n".join(rows).encode()).hexdigest()
 
 
+def compare(sdf, odf) -> tuple[bool, bool, bool]:
+    """(rows_ok, cols_ok, hash_ok) of a Spark result against its oracle
+    result, both pandas DataFrames."""
+    return (len(sdf) == len(odf),
+            sorted(sdf.columns) == sorted(odf.columns),
+            canonical_hash(sdf) == canonical_hash(odf))
+
+
 def main() -> int:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    only = set(sys.argv[2:])
+    sys.path.insert(0, ROOT)
+
     import duckdb
 
     import __spark_entry__ as entry_mod
@@ -66,27 +77,21 @@ def main() -> int:
 
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     failures = []
     for name, fn in queries.items():
-        if ONLY and name not in ONLY:
+        if only and name not in only:
             continue
         t0 = time.time()
-        sdf = fn(spark, SF_DIR).toPandas()
+        sdf = fn(spark, sf_dir).toPandas()
         t_spark = time.time() - t0
-        if name not in oracles:
-            print(f"{name}: rows={len(sdf)} (rows-only check, no oracle) [{t_spark:.1f}s]")
-            continue
         t0 = time.time()
         odf = con.execute(oracles[name]).fetchdf()
         t_duck = time.time() - t0
-        ok_rows = len(sdf) == len(odf)
-        ok_cols = sorted(sdf.columns) == sorted(odf.columns)
-        h1, h2 = canonical_hash(sdf), canonical_hash(odf)
-        ok_hash = h1 == h2
+        ok_rows, ok_cols, ok_hash = compare(sdf, odf)
         status = "OK" if (ok_rows and ok_cols and ok_hash) else "MISMATCH"
         print(f"{name}: {status} rows={len(sdf)}/{len(odf)} cols_ok={ok_cols} "
               f"hash_ok={ok_hash} [spark {t_spark:.1f}s, duckdb {t_duck:.1f}s]")

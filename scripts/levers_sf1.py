@@ -46,8 +46,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "scripts"))
 
 TIME_BUDGET_S = 15.0  # the fixed budget the levered variant must hold
 SF1_DIR = "/tmp/dggs_sf1"
@@ -158,7 +159,7 @@ def main() -> int:
             out[f"{name}/{variant}"] = rec
             print(json.dumps({f"{name}/{variant}": rec}), flush=True)
 
-    with open("/root/repo/LEVERS_sf1.json", "w") as f:
+    with open(os.path.join(ROOT, "LEVERS_sf1.json"), "w") as f:
         json.dump(out, f, indent=2)
     print("wrote LEVERS_sf1.json")
     return 0

@@ -6,7 +6,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 cpus = int(sys.argv[1])
 opts = set(sys.argv[2:])

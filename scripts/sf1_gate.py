@@ -20,10 +20,11 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "scripts"))
 
-from check_entry import canonical_hash  # noqa: E402
+from check_entry import compare  # noqa: E402
 
 SF1_DIR = "/tmp/dggs_sf1"
 SRC_DIR = "/root/testdata/sf0.1"
@@ -120,7 +121,7 @@ def _git_rev() -> str:
 
     try:
         return subprocess.run(
-            ["git", "-C", "/root/repo", "rev-parse", "--short", "HEAD"],
+            ["git", "-C", ROOT, "rev-parse", "--short", "HEAD"],
             capture_output=True, text=True, timeout=10).stdout.strip()
     except Exception:
         return "unknown"
@@ -170,6 +171,7 @@ def main() -> int:
                      "rev": _git_rev(), "ts": int(time.time())}
         if name == "knn_cells":
             rec["knn_stats"] = spatial_join.last_knn_stats
+        t0 = time.time()
         if name == "embed_clusters":
             # the registered oracle is a recursive reachability CTE whose
             # row mass is Σ|component|² — tractable at sf0.01, intractable
@@ -179,10 +181,7 @@ def main() -> int:
             # which carries its own sf1 row).
             import pandas as pd
 
-            from dggstools_spark.queries import ORACLES as _O
-
-            t0 = time.time()
-            pairs = con.execute(_O["embed_pairs"]).fetchall()
+            pairs = con.execute(ORACLES["embed_pairs"]).fetchall()
             parent: dict = {}
 
             def find(x):
@@ -198,30 +197,13 @@ def main() -> int:
             odf = pd.DataFrame(
                 sorted((n, find(n)) for n in parent),
                 columns=["vec_id", "cluster_id"])
-            rec.update(
-                oracle_rows=len(odf), duckdb_sec=round(time.time() - t0, 2),
-                oracle_kind="union_find_over_embed_pairs_sql",
-                rows_match=len(sdf) == len(odf),
-                schema_match=sorted(sdf.columns) == sorted(odf.columns),
-                hash_match=canonical_hash(sdf) == canonical_hash(odf))
-            ok = rec["rows_match"] and rec["schema_match"] and rec["hash_match"]
-            if not ok:
-                failures.append(name)
-            results[name] = rec
-            print(f"{name}: {'OK' if ok else 'MISMATCH'} {rec}", flush=True)
-            continue
-        if name in ORACLES:
-            t0 = time.time()
-            odf = con.execute(ORACLES[name]).fetchdf()
-            rec.update(
-                oracle_rows=len(odf), duckdb_sec=round(time.time() - t0, 2),
-                rows_match=len(sdf) == len(odf),
-                schema_match=sorted(sdf.columns) == sorted(odf.columns),
-                hash_match=canonical_hash(sdf) == canonical_hash(odf))
-            ok = rec["rows_match"] and rec["schema_match"] and rec["hash_match"]
+            rec["oracle_kind"] = "union_find_over_embed_pairs_sql"
         else:
-            rec["err"] = "no_oracle"
-            ok = len(sdf) > 0
+            odf = con.execute(ORACLES[name]).fetchdf()
+        rec.update(oracle_rows=len(odf), duckdb_sec=round(time.time() - t0, 2))
+        rows_ok, cols_ok, hash_ok = compare(sdf, odf)
+        rec.update(rows_match=rows_ok, schema_match=cols_ok, hash_match=hash_ok)
+        ok = rows_ok and cols_ok and hash_ok
         if not ok:
             failures.append(name)
         results[name] = rec
@@ -229,7 +211,7 @@ def main() -> int:
 
     # merge into the existing artifact so partial reruns (a named subset)
     # refresh their own rows without clobbering the rest of the gate
-    out_path = "/root/repo/CORRECTNESS_sf1.json"
+    out_path = os.path.join(ROOT, "CORRECTNESS_sf1.json")
     merged: dict = {}
     try:
         with open(out_path) as f:

@@ -569,3 +569,28 @@ def test_geopackage_streaming_write_and_cap(spark, tmp_path, monkeypatch):
     con = sqlite3.connect(path)
     assert con.execute('SELECT count(*) FROM "data"').fetchone()[0] == 10
     con.close()
+
+
+def test_register_rejects_duplicate_name():
+    from dggstools_spark import queries  # noqa: F401 (fills the registry)
+    from dggstools_spark.registry import ORACLES, QUERIES, register
+
+    before_q, before_o = list(QUERIES.items()), list(ORACLES.items())
+    with pytest.raises(ValueError, match="cell_counts"):
+        register("cell_counts", lambda spark, sf_dir: None, "SELECT 1")
+    assert list(QUERIES.items()) == before_q
+    assert list(ORACLES.items()) == before_o
+
+
+def test_registry_queries_and_oracles_share_names():
+    from dggstools_spark.queries import ORACLES, QUERIES
+
+    assert QUERIES and set(QUERIES) == set(ORACLES)
+
+
+def test_spark_entry_returns_the_registry():
+    import __spark_entry__
+    from dggstools_spark.queries import ORACLES, QUERIES
+
+    assert list(__spark_entry__.queries()) == list(QUERIES)
+    assert list(__spark_entry__.oracle_sql()) == list(ORACLES)
